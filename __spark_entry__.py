@@ -4816,9 +4816,9 @@ def oracle_sql() -> dict[str, str]:
                      ELSE coalesce(try_strptime(lower(trim(raw_post_date)), '%d/%m/%Y')::DATE,
                                    current_date)
                 END AS post_date,
-                regexp_replace(duong_pho, 'Đường |Phố ', '', 'g') AS duong_pho,
-                regexp_replace(phuong_xa, 'Phường |Xã ', '', 'g') AS phuong_xa,
-                trim(regexp_replace(quan_huyen, 'Quận |Huyện ', '', 'g')) AS quan_huyen,
+                replace(replace(duong_pho, 'Đường ', ''), 'Phố ', '') AS duong_pho,
+                replace(replace(phuong_xa, 'Phường ', ''), 'Xã ', '') AS phuong_xa,
+                trim(replace(replace(quan_huyen, 'Quận ', ''), 'Huyện ', '')) AS quan_huyen,
                 thanh_pho,
                 loai_bds,
                 CASE WHEN regexp_extract(trim(raw_area), '([\\d.,]+)\\s*m', 1) <> ''

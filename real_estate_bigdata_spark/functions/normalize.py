@@ -45,7 +45,13 @@ _DECIMAL_RE = r"([\d.,]+)"
 
 def _comma_to_dot(col: Column) -> Column:
     # Vietnamese decimal comma: "1,5" -> "1.5" (alonhadat.py:134,143,150-151)
-    return F.regexp_replace(col, ",", ".")
+    return F.translate(col, ",", ".")
+
+
+def _remove(col: Column, literal: str) -> Column:
+    """Every occurrence of ``literal`` removed — a plain substring
+    replace, no regex engine (the reference's ``str.replace(x, "")``)."""
+    return F.replace(col, F.lit(literal), F.lit(""))
 
 
 def parse_post_date(raw: Column) -> Column:
@@ -67,11 +73,14 @@ def strip_admin_prefix(col: Column, prefixes: tuple[str, ...]) -> Column:
     """F3 — administrative-prefix stripping (alonhadat.py:112-123).
 
     The reference does ``str.replace(prefix, "")`` which removes ALL
-    occurrences anywhere in the string — reproduced with an unanchored
-    ``regexp_replace`` for bit-parity (SURVEY §2.8 F3 note).
+    occurrences anywhere in the string, one prefix after the other (its
+    in-check-then-replace chain, SURVEY §2.8 F3 note) — reproduced with
+    one literal replace per prefix, in order. So removing one prefix can
+    expose the next: ``"PhĐường ố 1"`` -> ``"Phố 1"`` -> ``"1"``.
     """
-    pattern = "|".join(prefixes)
-    return F.regexp_replace(col, pattern, "")
+    for prefix in prefixes:
+        col = _remove(col, prefix)
+    return col
 
 
 def split_address(diachi: Column) -> tuple[Column, Column, Column, Column]:
@@ -135,9 +144,7 @@ def parse_dimensions(raw: Column) -> tuple[Column, Column]:
     The reference strips the label, removes ALL 'm' characters, splits on
     'x', comma->dot; "---" (and any 1-part string) -> (NULL, NULL).
     """
-    cleaned = F.regexp_replace(
-        F.regexp_replace(F.trim(raw), "Kích thước: ", ""), "m", ""
-    )
+    cleaned = _remove(_remove(F.trim(raw), "Kích thước: "), "m")
     parts = F.split(cleaned, "x")
     ok = (cleaned != "---") & (F.size(parts) >= 2)
     width = F.when(ok, _comma_to_dot(F.trim(parts.getItem(0))).try_cast("double"))
@@ -148,13 +155,13 @@ def parse_dimensions(raw: Column) -> tuple[Column, Column]:
 def strip_suffix_to_double(raw: Column, suffix: str) -> Column:
     """F7 — strip a unit suffix, cast double (road width 'm',
     alonhadat.py:158-161). Replace-all like the reference's str.replace."""
-    return _comma_to_dot(F.trim(F.regexp_replace(raw, suffix, ""))).try_cast("double")
+    return _comma_to_dot(F.trim(_remove(raw, suffix))).try_cast("double")
 
 
 def strip_suffix_to_int(raw: Column, suffix: str) -> Column:
     """F7 — strip a unit suffix, cast int (floors ' lầu' :163-166,
     bedrooms ' phòng ngủ' :168-171)."""
-    return F.trim(F.regexp_replace(raw, suffix, "")).try_cast("int")
+    return F.trim(_remove(raw, suffix)).try_cast("int")
 
 
 def parse_parking_flag(raw: Column) -> Column:

@@ -562,6 +562,11 @@ def minhash_lsh_pairs(
     With 16 bands x 4 rows, P(miss) at j=0.9 is ~4e-8 — the verified
     output is exact for any realistic corpus, at a fraction of the
     all-pairs cost. Output matches :func:`ngram_jaccard_pairs`.
+
+    ``id_col`` values must be unique: the signature kernel emits one
+    signature per input row, so a duplicated id multiplies its band keys
+    and the candidate pairs built from them. It is not checked at run
+    time, which would cost every call an extra Spark job.
     """
     if not 0 < bands <= num_hashes or num_hashes % bands != 0:
         # a non-divisor silently drops trailing signature rows from the
@@ -1543,6 +1548,11 @@ def neardup_against_store(
     row (see :func:`_band_keys`). Compacted stores
     (``streaming.ingest.compact_signature_store``) inherit the
     constraint: compaction rewrites rows verbatim.
+
+    ``id_col`` values must be unique within ``new_docs`` (the store is
+    distinct-by-id by construction, see below): a duplicated id
+    multiplies its band keys and candidate pairs. It is not checked at
+    run time, which would cost every call an extra Spark job.
 
     Semantics — signature-estimator, one-pass:
 

@@ -16,10 +16,32 @@ Replaces the reference's hand-rolled WebHDFS JSONL lake
   small files/day; `compact_partitions` rewrites each partition to
   size-targeted files with a dynamic partition overwrite (readers never
   see a partial partition).
+- **schema record**: ``<lake>/_lake_schema.json`` holds the schema of the
+  lake's data columns (partition columns left out). :func:`read_lake`
+  reads through it (``spark.read.schema(recorded).parquet``), which
+  skips the Spark job schema inference runs to read a footer; partition
+  columns are still discovered from the directory names, so the result
+  is the same frame. The underscore keeps the file out of Spark's file
+  listing. Rule: the record equals the schema of every data file in the
+  lake. The lake writers — :func:`write_lake`, :func:`compact_partitions`
+  and ``streaming.speed_layer.run_speed_layer`` — are the only code that
+  writes it, all through :class:`SchemaRecord`, and only when the lake
+  held no data before the write or is already recorded with the schema
+  being written; any other write deletes the record first, so reads
+  fall back to inference. A lake without a record (legacy lakes, other
+  writers) reads as before. Nullability: a batch read makes every
+  column nullable whatever the record or the footers say; a
+  streaming-sink read keeps the written flags, so the record keeps them
+  too (an in-place compaction, batch tables only, keeps a record whose
+  non-null flags its nullable rewrite no longer carries). Remaining
+  risk: a writer outside the lake writers that changes a recorded lake's
+  schema leaves the record stale — inference (``mergeSchema=false``) has
+  the same exposure, since it too reads a single footer.
 """
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,6 +53,7 @@ from real_estate_bigdata_spark.schema import RAW_LISTING_SCHEMA
 __all__ = [
     "read_raw_jsonl",
     "quarantine_split",
+    "SchemaRecord",
     "write_lake",
     "read_lake",
     "write_csv_view",
@@ -43,6 +66,83 @@ __all__ = [
 ]
 
 CORRUPT_COL = "_corrupt_record"
+
+#: file name of a lake's schema record, in the lake root
+SCHEMA_RECORD = "_lake_schema.json"
+
+
+class SchemaRecord:
+    """A lake's schema record (``<path>/_lake_schema.json``) — the only
+    code that reads, writes or deletes it.
+
+    A writer calls :meth:`admit` with the schema of the rows it is about
+    to write and, if that returned True, :meth:`commit` once the files
+    are written (a streaming sink commits before its query starts)."""
+
+    def __init__(self, spark: SparkSession, path: str):
+        jvm = spark.sparkContext._jvm
+        self._jvm = jvm
+        self._root = jvm.org.apache.hadoop.fs.Path(path)
+        self._file = jvm.org.apache.hadoop.fs.Path(self._root, SCHEMA_RECORD)
+        self._fs = self._root.getFileSystem(
+            spark.sparkContext._jsc.hadoopConfiguration()
+        )
+        self._recorded: StructType | None = None
+        self._admitted: StructType | None = None
+
+    def read(self) -> StructType | None:
+        """The recorded data schema, or None when the lake has no record."""
+        if not self._fs.exists(self._file):
+            return None
+        stream = self._fs.open(self._file)
+        try:
+            text = self._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        finally:
+            stream.close()
+        return StructType.fromJson(json.loads(text))
+
+    def _has_data(self) -> bool:
+        if not self._fs.exists(self._root):
+            return False
+        return any(
+            not st.getPath().getName().startswith(("_", "."))
+            for st in self._fs.listStatus(self._root)
+        )
+
+    def admit(self, schema: StructType, partition_cols: tuple[str, ...]) -> bool:
+        """Before writing rows of ``schema`` partitioned by
+        ``partition_cols``: True when the record may describe the lake
+        after the write — the lake holds no data yet, or its record
+        already equals the new data schema. Otherwise deletes the record,
+        so reads fall back to inference."""
+        new = StructType([f for f in schema if f.name not in partition_cols])
+        self._recorded = self.read()
+        if self._recorded != new:
+            if self._recorded is not None:
+                self._fs.delete(self._file, False)
+                self._recorded = None
+            if self._has_data():
+                return False
+        self._admitted = new
+        return True
+
+    def commit(self) -> None:
+        """Record the admitted schema (a temp file renamed into place, so
+        a reader never sees a partial record)."""
+        if self._admitted is None:
+            raise ValueError("commit() without a successful admit()")
+        if self._recorded == self._admitted:
+            return
+        tmp = self._jvm.org.apache.hadoop.fs.Path(self._root, SCHEMA_RECORD + ".tmp")
+        out = self._fs.create(tmp, True)
+        try:
+            out.write(bytearray(self._admitted.json().encode("utf-8")))
+        finally:
+            out.close()
+        self._fs.delete(self._file, False)
+        if not self._fs.rename(tmp, self._file):
+            raise OSError(f"could not move {tmp} to {self._file}")
+        self._recorded = self._admitted
 
 
 def read_raw_jsonl(
@@ -98,24 +198,37 @@ def write_lake(
     district, event timestamp). Costs one extra range shuffle at write
     time; leave empty for pure-throughput ingest. ``cluster_partitions``
     pins the output file count (file-size targeting); default lets AQE
-    size the range shuffle from the data."""
+    size the range shuffle from the data.
+
+    Keeps the lake's schema record under the rule in the module
+    docstring: recorded when the lake held no data or is already
+    recorded with this data schema, deleted otherwise."""
     if cluster_by:
         if cluster_partitions is not None:
             df = df.repartitionByRange(cluster_partitions, *cluster_by)
         else:
             df = df.repartitionByRange(*cluster_by)
         df = df.sortWithinPartitions(*cluster_by)
+    record = SchemaRecord(df.sparkSession, path)
+    recordable = record.admit(df.schema, partition_cols)
     writer = df.write.mode(mode).partitionBy(*partition_cols)
     if mode == "overwrite":
         writer = writer.option("partitionOverwriteMode", "dynamic")
     writer.parquet(path)
+    if recordable:
+        record.commit()
 
 
 def read_lake(spark: SparkSession, path: str) -> DataFrame:
     """Read the partitioned lake; partition columns come back typed via
     directory discovery, and `WHERE ingest_date = ...` prunes at the
-    directory level (never touches other partitions' files)."""
-    return spark.read.parquet(path)
+    directory level (never touches other partitions' files).
+
+    A recorded lake is read under its recorded data schema, which runs
+    no Spark job; a lake without a record pays schema inference."""
+    recorded = SchemaRecord(spark, path).read()
+    reader = spark.read if recorded is None else spark.read.schema(recorded)
+    return reader.parquet(path)
 
 
 def write_csv_view(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -215,6 +328,9 @@ def compact_partitions(
 
     ``predicate`` (e.g. ``"ingest_date = '2025-04-24'"``) limits work to
     the partitions it selects — dynamic overwrite touches only those.
+
+    Schema record: a ``dest_path`` write records like :func:`write_lake`;
+    an in-place rewrite keeps the schema, so it keeps the record.
     """
     streaming_table = _is_streaming_sink_table(spark, path)
     if streaming_table and dest_path is None:
@@ -228,7 +344,7 @@ def compact_partitions(
         # real file set, not the sink's view of it
         df = spark.read.option("basePath", path).parquet(f"{path}/*")
     else:
-        df = spark.read.parquet(path)
+        df = read_lake(spark, path)
     if predicate:
         df = df.filter(predicate)
     if dest_path is None:
@@ -267,6 +383,11 @@ def compact_partitions(
         .withColumn("__salt", F.pmod(F.xxhash64(*data_cols), files_per_part))
         .drop("__prows", *[f"__k_{c}" for c in partition_cols])
     )
+    record = None  # in place, the schema and so the record stay as they are
+    if dest_path is not None:
+        record = SchemaRecord(spark, dest_path)
+        if not record.admit(df.schema, partition_cols):
+            record = None
     (
         salted.repartition(total_files, *partition_cols, F.col("__salt"))
         .drop("__salt")
@@ -276,6 +397,8 @@ def compact_partitions(
         .partitionBy(*partition_cols)
         .parquet(dest_path or path)
     )
+    if record is not None:
+        record.commit()
 
 
 def export_jsonl_shards(

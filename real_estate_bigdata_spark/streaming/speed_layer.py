@@ -25,6 +25,7 @@ from real_estate_bigdata_spark.sources.kafka import (
     decode_kafka_records,
     encode_kafka_records,
 )
+from real_estate_bigdata_spark.sources.lake import SchemaRecord
 
 __all__ = [
     "write_kafka_envelopes",
@@ -78,14 +79,22 @@ def run_speed_layer(
     ``False`` runs continuously at ``processing_time`` cadence (the
     60-s half of the reference's hybrid flush ST1 — the 100-row half is
     ``maxOffsetsPerTrigger`` / ``maxFilesPerTrigger`` on the source).
+
+    The lake's schema record (``sources.lake``) is written before the
+    query starts, so ``read_lake`` skips schema inference — and a lake
+    with no committed batch yet reads as an empty frame.
     """
+    partition_cols = ("ingest_date", "source")
     decoded = decode_kafka_records(envelopes).drop("kafka_ts")
     normalized = normalize_listings(decoded)
+    record = SchemaRecord(envelopes.sparkSession, dest_dir)
+    if record.admit(normalized.schema, partition_cols):
+        record.commit()
     writer = (
         normalized.writeStream.format("parquet")
         .option("path", dest_dir)
         .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("ingest_date", "source")
+        .partitionBy(*partition_cols)
         .outputMode("append")
     )
     if available_now:

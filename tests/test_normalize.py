@@ -70,6 +70,21 @@ class TestAddress:
             == "Huế"
         )
 
+    def test_prefixes_removed_one_after_the_other(self, spark):
+        """Prefixes are replaced in order, like the reference's
+        in-check-then-replace chain: removing "Đường " here exposes
+        "Phố ", which the next replace removes too (a single-pass
+        alternation would stop at "Phố 1")."""
+        assert (
+            one_col(
+                spark, "PhĐường ố 1", lambda c: N.strip_admin_prefix(c, ("Đường ", "Phố "))
+            )
+            == "1"
+        )
+
+    def test_prefix_is_literal_not_regex(self, spark):
+        assert one_col(spark, "a.b a+b", lambda c: N.strip_admin_prefix(c, ("a.", "+"))) == "b ab"
+
 
 class TestPrice:
     @pytest.mark.parametrize(
